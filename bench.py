@@ -30,13 +30,15 @@ HEADLINE = list(QUERIES)
 
 def _cpu_ticks() -> tuple[int, int] | None:
     """(steal ticks, total ticks) from the aggregate /proc/stat cpu line.
-    Returns None where /proc/stat is unavailable (non-Linux)."""
+    The total sums the first 8 fields only: guest and guest_nice (fields 9
+    and 10) are already counted inside user and nice. Returns None where
+    /proc/stat is unavailable (non-Linux)."""
     try:
         with open("/proc/stat") as fh:
             parts = fh.readline().split()
         vals = [int(x) for x in parts[1:]]
         steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
+        return steal, sum(vals[:8])
     except (OSError, ValueError, IndexError):
         return None
 

@@ -76,11 +76,6 @@ def _marker_hits(toks: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(marker_arr, t)))
 
 
-def marker_hits(text: Column, markers: tuple[str, ...]) -> Column:
-    """Non-distinct count of tokens that belong to a marker set."""
-    return _marker_hits(tokens(text), markers)
-
-
 def _lang_id(toks: Column) -> Column:
     scores = {lang: _marker_hits(toks, m) for lang, m in LANG_MARKERS.items()}
     # greatest(...) then first lang (alphabetical) achieving it.

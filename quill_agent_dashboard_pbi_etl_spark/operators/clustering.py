@@ -28,10 +28,10 @@ like this; see SURVEY.md §7 north-star scope.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .materialize import pin, unpin
+from .materialize import pin, pin_observed, unpin
 
 
 def _pin_step_counting_changes(df: DataFrame) -> tuple[DataFrame, int]:
@@ -41,22 +41,21 @@ def _pin_step_counting_changes(df: DataFrame) -> tuple[DataFrame, int]:
 
     The loop previously ran a separate ``filter(label != old_label).limit(1)
     .count()`` job after every pin — a full extra driver round trip + job per
-    round whose input was the blocks the pin had just written. An
-    ``Observation`` attaches a CollectMetrics node that streams rows WHILE the
-    eager checkpoint materializes them, so the convergence count arrives with
-    the pin action itself (verified: ``Observation.get`` returns after a bare
+    round whose input was the blocks the pin had just written.
+    :func:`~.materialize.pin_observed` reads the convergence count from the
+    pin action itself (verified: ``Observation.get`` returns after a bare
     ``localCheckpoint(eager=True)``, including on empty frames). Bonus:
     ``old_label`` is consumed by the metric below the projection, so the
     checkpointed blocks now carry only (node, label) — one column fewer than
     before.
     """
-    obs = Observation()
-    observed = df.observe(
-        obs,
-        F.count(F.when(F.col("label") != F.col("old_label"), 1)).alias("changed"),
-    ).select("node", "label")
-    pinned = pin(observed, required=True)
-    return pinned, int(obs.get["changed"])
+    pinned, seen = pin_observed(
+        df,
+        required=True,
+        columns=["node", "label"],
+        changed=F.count(F.when(F.col("label") != F.col("old_label"), 1)),
+    )
+    return pinned, int(seen["changed"])
 
 
 def connected_components(

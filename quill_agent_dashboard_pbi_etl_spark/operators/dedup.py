@@ -398,23 +398,26 @@ def anti_join_small_left(
     JVM rebuilding and GC'ing the broadcast every trigger amplifies what a
     clean one-shot JVM prices at ~0.3 s. Better stats, worse plan;
     ``SCALE_LADDER.json streaming_ledger_layout`` + ``small_batch_gate``).
-    Both broadcasts here are bounded by the SMALL side; the big side is
-    scanned once, map-side, and never shuffled. Identical result to the
-    plain anti-join: ``left ∖ (right ⋉ left) = left ∖ right`` (null keys
-    match nothing in either shape).
+    Both broadcasts here are bounded by the SMALL side (the second by the
+    big side's rows for the small side's keys); the big side is scanned
+    once, map-side, and never shuffled. The plan has NO shuffle exchange
+    at all: broadcast semi and anti joins ignore duplicate build keys, so
+    neither build side needs a ``dropDuplicates``. Identical result to
+    the plain anti-join: ``left ∖ (right ⋉ left) = left ∖ right`` (null
+    keys match nothing in either shape; duplicate keys on either side
+    change neither join's output).
 
     Use in the flip regime (the streaming sink auto-detects it from plan
     stats) or on a cluster fabric where the avoided per-trigger shuffle
     is network-priced; against a healthy one-box sort-merge join the
-    plain anti-join measured faster (0.78× inverted at 100M keys), so
+    plain anti-join measured faster (0.78× inverted at 100M keys, with
+    the dropDuplicates this shape no longer has), and against a ledger
+    under ``INVERTED_GATE_MIN_LIVE_BYTES`` so does the plain broadcast, so
     this is not a blanket replacement.
     """
-    keys = left.select(key_col).dropDuplicates([key_col])
-    dup_keys = (
-        right.join(F.broadcast(keys), key_col, "left_semi")
-        .select(key_col)
-        .dropDuplicates([key_col])  # bounds the second broadcast by |keys|
-    )
+    dup_keys = right.join(
+        F.broadcast(left.select(key_col)), key_col, "left_semi"
+    ).select(key_col)
     return left.join(F.broadcast(dup_keys), key_col, "left_anti")
 
 
@@ -437,33 +440,53 @@ def parse_spark_bytes(value: str) -> int | None:
         return None
 
 
+# Smallest live-side estimate at which gate_anti_join inverts to the
+# shuffle-free anti_join_small_left. Measured per trigger (warm min-of-2,
+# flat ledger, 1250-event batches; SCALE_LADDER.json small_batch_gate
+# ``*_shuffle_free`` cells): the plain broadcast anti-join wins at 10k
+# live keys (0.57 vs 0.69 s) and 100k (0.545 MB estimate: 0.63 vs 0.85 s),
+# ties at 500k (2.84 MB: 0.87 vs 0.82 s) and loses at 2M (12500 events:
+# 1.66 vs 0.98 s).
+# Below the tie, building the small ledger's hash is cheaper than the
+# inverted shape's second broadcast; at and above it the per-key build
+# dominates. The floor sits just under the tie cell.
+INVERTED_GATE_MIN_LIVE_BYTES = 5 << 19  # 2.5 MiB
+
+
 def gate_anti_join(
     events: DataFrame, live: DataFrame, key_col: str
 ) -> DataFrame:
-    """``events LEFT ANTI live``, auto-inverted to
-    :func:`anti_join_small_left` in the measured BROADCAST-FLIP regime
+    """``events LEFT ANTI live``, auto-inverted to the shuffle-free
+    :func:`anti_join_small_left` in the BROADCAST-FLIP regime
     (:func:`is_broadcast_flip_regime` over driver-side plan-stat
     estimates — no job): when the live ledger's estimate lands under the
     session's broadcast threshold while still being the larger side, the
     planner hash-builds the whole live key set (left-anti can only build
     right) — per-trigger-fatal in streaming (r13: 2.9× drain slowdown)
     and the same pathology, unamplified, for a BATCH backfill looping
-    gate calls against a pruned just-under-threshold ledger (directive
-    r13-3 closed the batch-side exposure by routing every gate through
-    this one selector). Outside the flip regime the plain anti-join
-    stands: against a healthy sort-merge join the inverted shape measured
-    0.78× (``SCALE_LADDER.json small_batch_gate``). Identical result
-    either way.
+    gate calls against a pruned under-threshold ledger (directive r13-3
+    closed the batch-side exposure by routing every gate through this one
+    selector). Outside the flip regime the plain anti-join stands:
+    against a healthy sort-merge join the inverted shape measured 0.78×,
+    and against a live side under ``INVERTED_GATE_MIN_LIVE_BYTES`` the
+    plain broadcast of the small ledger is the cheaper plan. Identical
+    result either way.
+
+    The regime used to have a half-threshold floor (r14: invert only when
+    ``2 * big >= threshold``), priced against the inverted shape's old
+    form with two ``dropDuplicates`` shuffles. Without them the inverted
+    shape ties at a ~2.8 MB live estimate and wins above it
+    (``SCALE_LADDER.json small_batch_gate``), so the floor is now that
+    measured point — far
+    below half of a 64 MB threshold, which is where a streaming sink's
+    live ledger sits at every SLA-paced trigger.
 
     Cost ordering: ``probe_volume_estimate`` forces a Catalyst
     analysis+optimization pass on the probed subplan, which is cheap for
     the live side (a file scan + filter) but can be the full adapter
-    chain on the events side — so the live estimate and the
-    half-threshold floor are checked FIRST, and the events plan is only
-    ever sized inside the candidate flip window. In the common cases —
-    ledger far below the threshold (every small registry ledger) or
-    above it (every at-scale healthy-SMJ ledger) — this adds one cheap
-    plan-stat read and nothing else."""
+    chain on the events side — so the live estimate is checked against
+    the floor and the threshold FIRST, and the events plan is only ever
+    sized inside that window."""
     thresh = parse_spark_bytes(
         events.sparkSession.conf.get(
             "spark.sql.autoBroadcastJoinThreshold", "10MB"
@@ -471,11 +494,7 @@ def gate_anti_join(
     )
     if thresh is not None and thresh > 0:
         big = probe_volume_estimate(live)
-        if (
-            big is not None
-            and 2 * big >= thresh  # the measured-harm neighborhood...
-            and big <= thresh      # ...just under the threshold
-        ):
+        if big is not None and INVERTED_GATE_MIN_LIVE_BYTES <= big <= thresh:
             if is_broadcast_flip_regime(
                 probe_volume_estimate(events), big, thresh
             ):
@@ -489,32 +508,27 @@ def is_broadcast_flip_regime(
     """True when a ``small LEFT ANTI big`` join sits in the BROADCAST-FLIP
     regime: the planner will hash-build the BIG side because its estimate
     lands under the broadcast threshold while still being the larger side
-    (left-anti can only build right), and the small side is itself safely
-    broadcastable. This is the regime where
-    :func:`anti_join_small_left` replaces a per-call multi-million-key
-    hash build with two small-side broadcasts; outside it the plain
+    (left-anti can only build right), that build is at least
+    ``INVERTED_GATE_MIN_LIVE_BYTES`` (the measured point where it starts
+    costing more than the inverted shape's second broadcast), and the
+    small side is itself safely broadcastable. This is the regime where
+    :func:`anti_join_small_left` replaces a per-call hash build of the
+    big side with two small-side broadcasts; outside it the plain
     anti-join measured faster on one box (``SCALE_LADDER.json
     small_batch_gate``). ``None`` estimates (Catalyst couldn't size the
     plan) and a ``None`` threshold (an unparsable conf value — e.g. a
-    suffix ``_parse_spark_bytes`` doesn't know) are never the flip regime
+    suffix ``parse_spark_bytes`` doesn't know) are never the flip regime
     — the caller keeps the plain shape.
 
-    The ``2*big >= threshold`` floor (r14) bounds the regime to where
-    the harm was actually MEASURED — a big-side estimate JUST UNDER the
-    threshold (r13: pruning dropped 79 MB → 55 MB under the 64 MB
-    threshold; the harm is the multi-million-key hash build). A
-    genuinely small ledger (a few hundred KB against a 64 MB threshold)
-    broadcasts cheaply and the plain single-join plan is optimal —
-    inverting there swaps one tiny broadcast for two joins plus an
-    extra Catalyst pass sizing the events plan, a pure loss. Widen the
-    floor only on new harm measurements below it.
+    The floor is absolute, not a share of the threshold: what it prices
+    is the per-key hash build, whose cost does not depend on the conf.
     """
     return (
         small_est is not None
         and big_est is not None
         and threshold is not None
         and big_est <= threshold  # planner WILL hash-build the big side
-        and 2 * big_est >= threshold  # ...a near-threshold (measured-harm) build
+        and big_est >= INVERTED_GATE_MIN_LIVE_BYTES  # ...a costly build
         and big_est > small_est   # ...and it is the bigger side
         and small_est <= threshold  # small side safely broadcastable
     )

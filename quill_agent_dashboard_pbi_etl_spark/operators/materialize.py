@@ -33,7 +33,7 @@ hidden property of the operator internals.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 PIN_CONF = "spark.graft.pin"
 
@@ -53,6 +53,40 @@ def pin(df: DataFrame, required: bool = False) -> DataFrame:
     if strategy == "checkpoint":
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def pin_observed(
+    df: DataFrame,
+    required: bool = False,
+    columns: list[str] | None = None,
+    **counters: Column,
+) -> tuple[DataFrame, dict]:
+    """:func:`pin` ``df`` and return ``(pinned, {name: value})`` for the
+    named aggregate ``counters`` (e.g. ``rows=F.count(F.lit(1))``), read
+    from the pin's OWN action instead of a follow-up job.
+
+    An ``Observation`` attaches a CollectMetrics node that aggregates rows
+    while the eager checkpoint materializes them, so a counter costs no job
+    and no second pass — the replacement for ``pinned.isEmpty()`` /
+    ``.count()`` probes that re-run a job over blocks just written (or, on
+    a pass-through pin, the whole upstream lineage). ``columns`` projects
+    the pinned frame ABOVE the observation, so a counter may read columns
+    the pinned blocks do not carry.
+
+    Under ``spark.graft.pin=none`` with ``required=False`` nothing runs an
+    action — and ``Observation.get`` blocks until one does — so the
+    counters are computed by one aggregate job over ``df`` and the
+    pass-through frame is returned."""
+    aggs = [c.alias(name) for name, c in counters.items()]
+    strategy = df.sparkSession.conf.get(PIN_CONF, "localCheckpoint")
+    if strategy == "none" and not required:
+        values = df.agg(*aggs).first().asDict()
+        return (df.select(*columns) if columns else df), values
+    obs = Observation()
+    observed = df.observe(obs, *aggs)
+    if columns:
+        observed = observed.select(*columns)
+    return pin(observed, required=required), dict(obs.get)
 
 
 def unpin(df: DataFrame) -> None:

@@ -624,40 +624,6 @@ def _lsh_buckets_numpy(
     )
 
 
-def _pairs_cosine_numpy(
-    pairs_with_vecs: DataFrame, threshold: float
-) -> DataFrame:
-    """(vec_a, vec_b, va, vb) → (vec_a, vec_b, cosine_sim ≥ threshold) via a
-    vectorized per-batch numpy dot — the Arrow fast lane for pair
-    verification (same 6-dp rounding as the JVM/SQL paths)."""
-    import numpy as np
-    import pandas as pd
-
-    def batch(frames):
-        for pdf in frames:
-            if not len(pdf):
-                continue
-            a = np.array(list(pdf["va"]), dtype=np.float64)
-            b = np.array(list(pdf["vb"]), dtype=np.float64)
-            sims = np.round(
-                np.einsum("ij,ij->i", a, b)
-                / (np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)),
-                6,
-            )
-            keep = sims >= threshold
-            yield pd.DataFrame(
-                {
-                    "vec_a": pdf["vec_a"].to_numpy()[keep],
-                    "vec_b": pdf["vec_b"].to_numpy()[keep],
-                    "cosine_sim": sims[keep],
-                }
-            )
-
-    return pairs_with_vecs.mapInPandas(
-        batch, "vec_a long, vec_b long, cosine_sim double"
-    )
-
-
 def train_ivf_centroids(
     corpus: DataFrame,
     n_cells: int = 8,
@@ -723,21 +689,6 @@ def train_ivf_centroid_rows(
             (r["centroid_id"], [float(x) for x in r[vec_col]]) for r in new.collect()
         )
     return rows
-
-
-def assign_ivf_cells_multi(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    n_probe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Like assign_ivf_cells but keeps the ``n_probe`` nearest cells per
-    vector — the query-side recall knob (each extra probe joins one more
-    cell's worth of candidates). Same narrow-projection shape as
-    :func:`_nearest_cells` (no crossJoin, no window exchange)."""
-    v = vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("vec"))
-    return _nearest_cells(v, _collect_centroids(centroids, vec_col), n_probe, id_col)
 
 
 def ivf_topk_trained(

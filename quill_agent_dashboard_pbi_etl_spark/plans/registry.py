@@ -25,6 +25,7 @@ from ..operators import dedup, gates, rollups, similarity, skew, star
 from ..operators.materialize import pin
 from ..sources.readers import load_table
 from ..sources.webhook_mapping import (
+    ND_BARRIER_CONF,
     NORMALIZED_CTE,
     NOW_ANCHOR,
     NOW_ANCHOR_DATE,
@@ -57,13 +58,19 @@ def register(name: str, oracle: str | None = None):
 # re-executes the full scan→normalize pipeline from parquet. Spark marks
 # resolved subtrees analyzed, so queries building on the memoized frame skip
 # re-analysis of the whole chain (measured: follow-up filter+groupBy
-# constructs in ~0.03 s).
-_FACT_PLAN_CACHE: dict[tuple[str, str], DataFrame] = {}
+# constructs in ~0.03 s). The key carries the session's resolved
+# ``spark.graft.ndBarrier`` value, the one conf the memoized plan bakes in,
+# so flipping it mid-session builds the other plan instead of reusing this.
+_FACT_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
 
 
 def normalized_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet → webhook shape → adapter pipeline (P1-P12)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        spark.conf.get(ND_BARRIER_CONF, "on"),
+    )
     df = _FACT_PLAN_CACHE.get(key)
     if df is None:
         df = normalize_webhooks(

@@ -265,7 +265,10 @@ def append_ledger(
 
 
 def read_ledger(
-    spark: SparkSession, path: str, now_epoch: int | None = None
+    spark: SparkSession,
+    path: str,
+    now_epoch: int | None = None,
+    schema: str | None = None,
 ) -> DataFrame:
     """Load a ledger written by :func:`append_ledger`, either layout. On an
     expiry-partitioned ledger with ``now_epoch`` given, applies the
@@ -285,11 +288,18 @@ def read_ledger(
     ``ignoreMissingFiles``: semantically exact here, because compaction
     only ever removes directories whose every row is already expired —
     rows the gate's row-level ``expiresAt`` filter would drop anyway. A
-    concurrent reader misses only data it must not see."""
+    concurrent reader misses only data it must not see.
+
+    ``schema`` (a DDL string of the ledger columns) skips parquet schema
+    inference, which costs one Spark job per read — the saving a
+    per-trigger reader such as the streaming sink wants. On the
+    partitioned layout ``expiryDay date`` is appended to it."""
     is_part = ledger_is_partitioned(path)
     reader = spark.read
     if is_part:
         reader = reader.option("ignoreMissingFiles", "true")
+    if schema is not None:
+        reader = reader.schema(f"{schema}, expiryDay date" if is_part else schema)
     df = reader.parquet(path)
     if "expiryDay" in df.columns:
         if now_epoch is not None:

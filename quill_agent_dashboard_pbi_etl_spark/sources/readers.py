@@ -15,20 +15,6 @@ from pyspark.sql import functions as F
 
 from ..schemas import ROSTER_REPORT_SCHEMA
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 # Analyzed-plan memo (driver-overhead optimization, r14 — guide §5 "the
 # driver should do almost no data work"). ``spark.read.parquet`` re-lists
 # the path, re-reads the footer schema and re-analyzes the projection on
@@ -136,16 +122,6 @@ def ensure_min_partitions(df: DataFrame, min_parts: int | None = None) -> DataFr
     if effective >= min_parts:
         return df
     return df.repartition(min_parts)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every driver table as a temp view for spark.sql queries."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def replay_json_dir(

@@ -192,8 +192,8 @@ def should_bloom_pregate(
 
     ``batch_rows=None`` means "assume a huge batch": only the live-ledger
     axes are tested. The predicate is monotone in ``batch_rows``, so
-    None ≡ +inf — the sink uses it to ask whether the pre-gate COULD fire
-    at all before paying the batch-sizing count job."""
+    None ≡ +inf — it asks whether the pre-gate COULD fire at all before
+    a caller pays for a batch count."""
     if min_batch_rows is None:
         min_batch_rows = PREGATE_AUTO_MIN_BATCH_ROWS
     if live_est_bytes is None:
@@ -224,6 +224,23 @@ def start_ledger_gated_fact_sink(
     """K4 under streaming: per-micro-batch atomic ledger gate+mark against an
     EXTERNAL parquet ledger (the reference's DynamoDB cycle verbatim,
     ledger.repo.ts:16-27), then the K1 append sink.
+
+    Per-trigger jobs (exact gate, flat ledger, default ``localCheckpoint``
+    pins): at most 9 for a small SLA-paced batch against a
+    broadcastable ledger — the ``unique`` pin (keep-first shuffle + the
+    checkpoint, 2), the ``claims`` pin (the claim de-dup shuffle and the
+    checkpoint, plus the gate's broadcasts: two small-side ones through
+    the shuffle-free inverted gate, or one of a ledger small enough that
+    the plain gate keeps it — 4 or 3), the claim append (1) and the
+    read-back verify and output write (a broadcast and the write, 2).
+    The batch and claim row counts ride the pins' own actions as
+    ``Observation`` counters (:func:`..operators.materialize.pin_observed`)
+    — a separate ``isEmpty()`` job on the batch would re-run the JSON
+    parse — and the ledger read passes its known schema, so no job infers
+    it.
+    A batch that normalizes to zero rows stops after the first pin: no
+    lock, no ledger append, no output directory. Every pin is unpinned at
+    batch end, so no dead blocks outlive the trigger.
 
     ``partition_by_expiry`` carries ``sinks.append_ledger``'s three-valued
     contract through unchanged (ADVICE r13 — the flag used to map False to
@@ -292,8 +309,8 @@ def start_ledger_gated_fact_sink(
     ``bloom_pregate="auto"`` is a CLUSTER-FABRIC opt-in that applies the
     structural regime rule per micro-batch: :func:`should_bloom_pregate`
     enables the pre-gate only when the deduped micro-batch carries >=
-    ``PREGATE_AUTO_MIN_BATCH_ROWS`` events (one count job over the
-    already-pinned batch, paid only when the ledger signal could fire)
+    ``PREGATE_AUTO_MIN_BATCH_ROWS`` events (the row count the batch pin
+    observes, no extra job)
     AND the TTL-live ledger's Catalyst plan-size estimate (a driver-side
     stat read, no job) exceeds the session's broadcast threshold — the
     regime where the exact gate sort-merges the whole batch and the
@@ -341,7 +358,7 @@ def start_ledger_gated_fact_sink(
         ledger_gate_bloom,
         probe_volume_estimate,
     )
-    from ..operators.materialize import pin
+    from ..operators.materialize import pin_observed, unpin
     from ..sinks import append_ledger, read_ledger, utc_day_of
 
     if bloom_pregate not in (True, False, "auto"):
@@ -352,9 +369,7 @@ def start_ledger_gated_fact_sink(
     sink_ledger_schema = "pk string, seenAt timestamp, expiresAt long, writer_id string"
     gen = _generation_id(checkpoint_dir, storage)  # immutable per incarnation
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def gate_and_write(batch_df: DataFrame, batch_id: int, pinned: list) -> None:
         spark = batch_df.sparkSession
         now = now_epoch if now_epoch is not None else int(time.time())
         tag = f"{gen}-b{batch_id}"
@@ -366,26 +381,32 @@ def start_ledger_gated_fact_sink(
         # Measured at the sf100 single-batch drain (100M envelopes): the
         # unpinned Bloom path re-parsed ~30 GB of JSONL three times and ran
         # 744 s vs 330 s exact — lineage cost, not gate cost. The pin is
-        # micro-batch-sized; blocks are released by the ContextCleaner when
-        # the batch's DataFrames go out of scope. This is a PERF pin
-        # (correctness rides on the `claims` pin below), so it honors the
-        # session's `spark.graft.pin=none` escape hatch — at tiny SLA-paced
-        # triggers the eager checkpoint job is measurable overhead
-        # (~2 s/batch at 25k-event batches) while the lineage it saves is
-        # pennies.
-        unique = pin(
+        # micro-batch-sized and unpinned at batch end (write_batch). This
+        # is a PERF pin (correctness rides on the `claims` pin below), so
+        # it honors the session's `spark.graft.pin=none` escape hatch — at
+        # tiny SLA-paced triggers the eager checkpoint job is measurable
+        # overhead (~2 s/batch at 25k-event batches) while the lineage it
+        # saves is pennies. The row count rides the pin's own action in
+        # place of a separate `isEmpty()` job, which re-ran the JSON parse.
+        unique, seen = pin_observed(
             keep_first(
                 batch_df, ["EventID"], [F.col("EventTime"), F.col("Notes")]
             ),
             required=False,
+            rows=F.count(F.lit(1)),
         )
+        pinned.append(unique)
+        if seen["rows"] == 0:
+            return  # nothing normalized: no lock, no claims, no output
         with LedgerLock(ledger_path):
             try:
                 # Partition-prunes expired expiryDay= dirs on the
                 # partitioned layout (the scan paid every trigger); the
                 # row-level TTL filter below stays authoritative for the
-                # boundary day. Flat layout: plain full read, as before.
-                ledger = read_ledger(spark, ledger_path, now_epoch=now)
+                # boundary day. The known schema skips the inference job.
+                ledger = read_ledger(
+                    spark, ledger_path, now_epoch=now, schema=sink_ledger_schema
+                )
             except Exception:  # first batch bootstraps the ledger
                 ledger = spark.createDataFrame([], sink_ledger_schema)
             live = ledger.filter(F.col("expiresAt") >= F.lit(now)).select(
@@ -393,20 +414,14 @@ def start_ledger_gated_fact_sink(
             )
             use_pregate = bloom_pregate is True
             if bloom_pregate == "auto":
-                # The live-side signals are driver-side stat/conf reads (no
-                # job); the batch count is one scalar job over blocks the
-                # pin above already materialized — pay it only when the
-                # live axes could fire at all (batch_rows=None = "assume a
-                # huge batch"), so SLA-paced triggers against a small
-                # ledger add zero jobs.
+                # The live-side signals are driver-side stat/conf reads
+                # (no job); the batch size is the count the pin above
+                # already observed.
                 est = probe_volume_estimate(live)
                 thresh = _parse_spark_bytes(
                     spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB")
                 )
-                if should_bloom_pregate(est, thresh, batch_rows=None):
-                    use_pregate = should_bloom_pregate(
-                        est, thresh, unique.count()
-                    )
+                use_pregate = should_bloom_pregate(est, thresh, seen["rows"])
             if use_pregate:
                 # Bloom pre-gate: identical survivor set (no false
                 # negatives; maybes re-check via the exact anti-join inside
@@ -414,18 +429,22 @@ def start_ledger_gated_fact_sink(
                 # the batch enters the anti-join shuffle. Sized from the
                 # live-key count at 1% fpp (bloom_build's formula).
                 #
-                # pin: the TTL-filtered live key set is consumed 3× on this
-                # path (the sizing count here, the word-table fold, and the
-                # maybe-side exact anti-join inside ledger_gate_bloom) —
-                # without it each consumer re-scans and re-filters the full
-                # ledger, doubling the per-batch fixed cost that already
-                # bounds the pre-gate's payoff regime. Passing the pinned
-                # frame through `live=` makes all three share one
-                # materialization. PERF pin (the gate is correct with full
-                # lineage), so it honors `spark.graft.pin=none`.
-                live = pin(live, required=False)
-                live_n = live.count()
-                num_bits = max(1 << 16, int(1.44 * live_n * math.log2(1 / 0.01)))
+                # pin: the TTL-filtered live key set is consumed 3× on
+                # this path (the sizing count, the word-table fold, and
+                # the maybe-side exact anti-join inside
+                # ledger_gate_bloom) — without it each consumer re-scans
+                # and re-filters the full ledger. The sizing count rides
+                # the pin's action; passing the pinned frame through
+                # `live=` makes the other two share one materialization.
+                # PERF pin (the gate is correct with full lineage), so it
+                # honors `spark.graft.pin=none`.
+                live, live_seen = pin_observed(
+                    live, required=False, rows=F.count(F.lit(1))
+                )
+                pinned.append(live)
+                num_bits = max(
+                    1 << 16, int(1.44 * live_seen["rows"] * math.log2(1 / 0.01))
+                )
                 new_events = ledger_gate_bloom(
                     unique,
                     ledger,
@@ -441,26 +460,24 @@ def start_ledger_gated_fact_sink(
                 )
             else:
                 # Exact gate through the ONE join-shape selector shared
-                # with the batch gates (directive r13-3): the BROADCAST-
-                # FLIP pathology — Spark can only build the RIGHT side of
-                # a left-anti join, so a live-ledger estimate landing
-                # UNDER the broadcast threshold while being the LARGER
-                # side hash-builds millions of live keys per trigger
-                # (measured ~5.7 s/trigger over a 2x2-reproduced 8-batch
-                # drain on the pruned partitioned layout;
+                # with the batch gates (directive r13-3): when the live
+                # ledger's estimate lands under the broadcast threshold
+                # while being the larger side, Spark would hash-build
+                # every live key per trigger (left-anti can only build
+                # right; measured ~5.7 s/trigger over an 8-batch drain,
                 # SCALE_LADDER.json streaming_ledger_layout +
-                # small_batch_gate) — auto-inverts to
-                # anti_join_small_left in exactly that regime; outside it
-                # the plain anti-join stands (the inverted shape loses
-                # 0.78× against a healthy sort-merge join). Estimates are
-                # driver-side plan stats (no job); when either is
-                # unavailable the plain shape stands. See
+                # small_batch_gate) — the selector inverts to the
+                # shuffle-free anti_join_small_left there, which
+                # broadcasts only the batch's keys. Above the threshold
+                # the plain sort-merge anti-join stands. Estimates are
+                # driver-side plan stats (no job). See
                 # operators.dedup.gate_anti_join.
                 new_events = gate_anti_join(unique, live, "EventID")
-            # pin: the claim set is consumed twice (emptiness check + the
+            # pin: the claim set is consumed twice (its row count + the
             # append) — materialize the micro-batch-sized result once
-            # instead of running the ledger anti-join twice under the lock.
-            claims = pin(
+            # instead of running the ledger anti-join twice under the
+            # lock; the count rides the pin's action.
+            claims, claims_seen = pin_observed(
                 new_events
                 .select(
                     F.col("EventID").alias("pk"),
@@ -477,11 +494,13 @@ def start_ledger_gated_fact_sink(
                 )
                 .dropDuplicates(["pk"]),
                 required=True,
+                rows=F.count(F.lit(1)),
             )
+            pinned.append(claims)
             # An all-duplicate batch claims nothing — skip the append so a
             # long-running stream doesn't shed one empty parquet file set
             # per trigger.
-            if not claims.isEmpty():
+            if claims_seen["rows"] > 0:
                 # The sink's three-valued flag passes through verbatim:
                 # None follows the existing layout, an explicit True/False
                 # establishes-or-enforces it (append_ledger raises on a
@@ -536,6 +555,17 @@ def start_ledger_gated_fact_sink(
             .partitionBy("FactDateKey")
             .parquet(f"{output_dir}/gen={gen}/batch_id={batch_id}")
         )
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        pinned: list[DataFrame] = []
+        try:
+            gate_and_write(batch_df, batch_id, pinned)
+        finally:
+            # Nothing executes this batch's pins again: free their blocks
+            # now rather than leaving them to the ContextCleaner (and the
+            # caller's release_dead_blocks to a System.gc()).
+            for df in pinned:
+                unpin(df)
 
     writer = fact_stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_dir

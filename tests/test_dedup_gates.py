@@ -694,7 +694,7 @@ def test_anti_join_small_left_parity_and_plan(spark):
     """anti_join_small_left == plain left-anti on every overlap shape
     (incl. null keys and duplicate right keys), and its plan never
     sort-merge-shuffles or hash-builds the BIG side: both joins are
-    BroadcastHashJoin with small-side builds."""
+    BroadcastHashJoin with small-side builds, and nothing else exchanges."""
     left = spark.createDataFrame(
         [("a",), ("b",), ("x",), (None,)], "k string"
     )
@@ -725,6 +725,9 @@ def test_anti_join_small_left_parity_and_plan(spark):
     )
     assert "SortMergeJoin" not in plan
     assert plan.count("BroadcastHashJoin") == 2
+    # shuffle-free: the only exchanges are the two broadcasts (duplicate
+    # build keys change neither broadcast join, so no dropDuplicates)
+    assert plan.count("Exchange") == plan.count("BroadcastExchange") == 2
 
 
 def test_batch_ledger_gate_auto_inverts_in_flip_regime(spark, tmp_path):
@@ -738,14 +741,13 @@ def test_batch_ledger_gate_auto_inverts_in_flip_regime(spark, tmp_path):
     import datetime as dt
 
     now = int(dt.datetime(2024, 1, 20, tzinfo=dt.timezone.utc).timestamp())
-    # ~50k-key parquet ledger (~150KB estimate), well above the 3-row
-    # events side; the session threshold is dropped to 256KB for this
-    # block so the ledger sits in the flip window [threshold/2,
-    # threshold] — the r14 floor keeps genuinely small-vs-threshold
-    # ledgers on the plain shape, so at the default 64MB this ledger
-    # would (correctly) not invert.
+    # 1M-key parquet ledger, well above the 3-row events side; the
+    # session threshold is set to 64MB for this block so the ledger sits
+    # in the flip window [INVERTED_GATE_MIN_LIVE_BYTES, threshold] — the
+    # measured floor keeps small ledgers (under ~2.5 MiB, e.g. a 50k-key
+    # one) on the plain shape, where building their hash is cheaper.
     ledger_path = str(tmp_path / "ledger")
-    spark.range(50_000).select(
+    spark.range(1_000_000).select(
         F.concat(F.lit("pk-"), F.col("id")).alias("pk"),
         F.timestamp_seconds(F.lit(now - 3600)).alias("seenAt"),
         F.lit(now + 86400).cast("long").alias("expiresAt"),
@@ -756,12 +758,13 @@ def test_batch_ledger_gate_auto_inverts_in_flip_regime(spark, tmp_path):
     # plain shape by design)
     events_path = str(tmp_path / "events")
     spark.createDataFrame(
-        [("pk-5",), ("pk-49999",), ("novel-1",)], "dedup_key string"
+        [("pk-5",), ("pk-999999",), ("novel-1",)], "dedup_key string"
     ).coalesce(1).write.parquet(events_path)
     events = spark.read.parquet(events_path)
     prev_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(256 * 1024))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 << 20))
     try:
+        assert dedup.probe_volume_estimate(ledger) >= dedup.INVERTED_GATE_MIN_LIVE_BYTES
         out = dedup.ledger_gate(events, ledger, now_epoch=now)
         assert {r.dedup_key for r in out.collect()} == {"novel-1"}
         plan = (
@@ -814,9 +817,14 @@ def test_is_broadcast_flip_regime_boundaries():
     assert not flip(1 << 20, 55 << 20, -1)      # broadcast disabled (-1)
     assert flip(T, T + 1 - 1, T) is False       # big == small == threshold
     assert flip(T - 1, T, T)                    # boundary: big at threshold
-    # the r14 half-threshold floor: the regime is a NEAR-threshold build
-    # (where the harm was measured), never a genuinely small ledger that
-    # broadcasts cheaply anyway
-    assert not flip(10 << 10, 150 << 10, T)     # 150KB ledger: plain wins
-    assert flip(1 << 20, 32 << 20, T)           # exactly at the floor
-    assert not flip(1 << 20, (32 << 20) - 1, T) # just under the floor
+    # the measured floor (SCALE_LADDER.json small_batch_gate *_shuffle_free
+    # cells: plain wins at 10k and 100k live keys, ties at 500k / 2.84 MB,
+    # loses at 2M): below it building the ledger's hash beats the inverted
+    # shape's second broadcast. It replaced the r14 half-threshold floor,
+    # which was priced against the shuffle-ful inverted shape.
+    floor = dedup.INVERTED_GATE_MIN_LIVE_BYTES
+    assert not flip(10 << 10, 150 << 10, T)     # 150KB ledger: under the floor
+    assert flip(1 << 20, 32 << 20, T)           # half the threshold
+    assert flip(1 << 20, (32 << 20) - 1, T)     # ...and just under it
+    assert flip(10 << 10, floor, T)             # exactly at the floor
+    assert not flip(10 << 10, floor - 1, T)     # just under the floor

@@ -2,13 +2,14 @@
 pixel-domain accuracy on smooth content, hand-built spec fixtures that are
 independent of the encoder, profile hooks, and the multimodal wiring."""
 
+import os
 import struct
 import sys
 
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from quill_agent_dashboard_pbi_etl_spark.functions import jpeg
 from quill_agent_dashboard_pbi_etl_spark.functions.multimodal import (

@@ -1,4 +1,4 @@
-"""Materialization strategy dial (operators/materialize.pin)."""
+"""Materialization strategy dial (operators/materialize.pin, pin_observed)."""
 
 from __future__ import annotations
 
@@ -76,3 +76,43 @@ def test_connected_components_retires_superseded_pins(spark):
         f"CC leaked {after - before} persisted RDDs (expected <= 1: the "
         "final step backing the result)"
     )
+
+
+def test_pin_observed_counts_exactly_under_every_strategy(spark):
+    """pin_observed returns exact counters from the pin's own action on an
+    empty and a non-empty frame, under the default localCheckpoint and under
+    spark.graft.pin=none (where no pin action runs, so the counters come
+    from one aggregate and the frame passes through)."""
+    from pyspark.sql import functions as F
+
+    from quill_agent_dashboard_pbi_etl_spark.operators.materialize import (
+        pin_observed,
+    )
+
+    counters = {
+        "rows": F.count(F.lit(1)),
+        "evens": F.count(F.when(F.col("id") % 2 == 0, 1)),
+    }
+    for strategy in ("localCheckpoint", "none"):
+        spark.conf.set(PIN_CONF, strategy)
+        try:
+            for n, evens in ((0, 0), (11, 6)):
+                df = spark.range(n)
+                out, seen = pin_observed(df, **counters)
+                assert seen == {"rows": n, "evens": evens}, (strategy, n)
+                assert out.count() == n
+                if strategy == "none":
+                    assert out is df
+                else:
+                    plan = out._jdf.queryExecution().analyzed()
+                    assert plan.getClass().getSimpleName() == "LogicalRDD"
+            # `columns` projects above the observation: the counter reads a
+            # column the pinned frame does not carry
+            wide = spark.range(5).withColumn("flag", F.col("id") > 2)
+            out, seen = pin_observed(
+                wide, columns=["id"], flagged=F.count(F.when(F.col("flag"), 1))
+            )
+            assert seen == {"flagged": 2}
+            assert out.columns == ["id"]
+        finally:
+            spark.conf.unset(PIN_CONF)

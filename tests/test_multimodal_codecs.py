@@ -424,9 +424,10 @@ def test_codec_golden_features(seed):
 # per-byte reference implementations in tools/png_scalar_reference.py.
 # ---------------------------------------------------------------------------
 
+import os as _os
 import sys as _sys
 
-_sys.path.insert(0, "/root/repo")
+_sys.path.insert(0, _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
 
 import numpy as np  # noqa: E402
 

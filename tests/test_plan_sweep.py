@@ -81,9 +81,7 @@ def test_nd_barrier_keeps_consumer_filters_above_spreading_exchange(spark):
     )
 
     def fact_plan() -> str:
-        registry._FACT_PLAN_CACHE.clear()  # memo keyed per session, not per conf
         df = registry.normalized_fact(spark, SF_SMALL).filter("MetricID = 'CALLS'")
-        registry._FACT_PLAN_CACHE.clear()
         return df._jdf.queryExecution().executedPlan().toString()
 
     plan_on = fact_plan()
@@ -107,3 +105,28 @@ def test_nd_barrier_keeps_consumer_filters_above_spreading_exchange(spark):
     finally:
         spark.conf.unset(ND_BARRIER_CONF)
     assert "shuffle(array(" not in plan_off, "escape hatch did not disable the barrier"
+
+
+def test_fact_plan_memo_follows_nd_barrier_flag(spark):
+    """The adapter plan memo is keyed by the session's ndBarrier value, so
+    turning the flag off mid-session (after a fact query already filled the
+    memo) yields the barrier-free plan, and turning it back on returns the
+    memoized barrier plan — no manual cache clearing."""
+    from quill_agent_dashboard_pbi_etl_spark.plans import registry
+    from quill_agent_dashboard_pbi_etl_spark.sources.webhook_mapping import (
+        ND_BARRIER_CONF,
+    )
+
+    def plan(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    on = registry.normalized_fact(spark, SF_SMALL)
+    assert "shuffle(array(" in plan(on)
+    spark.conf.set(ND_BARRIER_CONF, "off")
+    try:
+        off = registry.normalized_fact(spark, SF_SMALL)
+    finally:
+        spark.conf.unset(ND_BARRIER_CONF)
+    assert off is not on
+    assert "shuffle(array(" not in plan(off)
+    assert registry.normalized_fact(spark, SF_SMALL) is on

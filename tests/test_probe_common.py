@@ -5,9 +5,12 @@ flagged before any rule cites them."""
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+LADDER = os.path.join(ROOT, "SCALE_LADDER.json")
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from probe_common import AMBIENT_WALL_RATIO, ambient_suspect, annotate_ladder
 
@@ -58,7 +61,7 @@ def test_committed_ladder_carries_the_flags():
     """The shipped SCALE_LADDER.json was re-adjudicated under the rule: the
     r10 narrative's ambient-degraded cells carry the flag; the fresh-JVM
     alternated-order cells do not."""
-    data = json.load(open("/root/repo/SCALE_LADDER.json"))
+    data = json.load(open(LADDER))
     flip = data["streaming_ledger_gate"]["flip_point"]
     # the killed 0.60x cell: its pre-gate pair is flagged
     assert flip["vol60pct_seed100pct"]["bloom_pregate"]["ambient_suspect"]
@@ -86,7 +89,7 @@ def test_committed_ladder_pins_the_r13_gate_adjudication():
     under its own key (the judge checks that negative and falsified
     results are not silently overwritten), and the final summaries say
     what the round concluded."""
-    data = json.load(open("/root/repo/SCALE_LADDER.json"))
+    data = json.load(open(LADDER))
 
     # streaming drain: three acts — pre-fix multifile (the 2.9x
     # regression), one-file-per-day-still-broken (the falsified

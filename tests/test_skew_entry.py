@@ -2,9 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from quill_agent_dashboard_pbi_etl_spark.operators import skew
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ENTRY = os.path.join(ROOT, "__spark_entry__.py")
 
 
 def test_salted_agg_count_matches_plain(spark):
@@ -71,7 +76,7 @@ def test_salted_join_equivalence_property(spark, fact_keys, hot_list, buckets):
 def test_entry_contract(spark):
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("entrymod", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entrymod", ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
@@ -99,7 +104,7 @@ def test_driver_window_invariants():
     design, each paired with an oracle-backed accuracy-contract query)."""
     import importlib.util
 
-    spec = importlib.util.spec_from_file_location("entrymod2", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location("entrymod2", ENTRY)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
@@ -134,7 +139,7 @@ def test_driver_window_covers_freshness_contract():
     import re
 
     files = sorted(
-        glob.glob("/root/repo/CORRECTNESS_r*.json"),
+        glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json")),
         key=lambda p: int(re.search(r"_r(\d+)", p).group(1)),
     )
     if len(files) < 1:
@@ -155,7 +160,7 @@ def test_driver_window_covers_freshness_contract():
                 green.add(name)
 
     spec = importlib.util.spec_from_file_location(
-        "entrymod3", "/root/repo/__spark_entry__.py"
+        "entrymod3", ENTRY
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

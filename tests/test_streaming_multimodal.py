@@ -4,6 +4,7 @@ multimodal column plumbing."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -1584,7 +1585,7 @@ def test_reclaim_ledger_cli_smoke(spark, tmp_path):
     compaction, RUNBOOK defaults; prints/returns the JSON summary."""
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
     import reclaim_ledger as _cli
 
     s = _build_orphan_scenario(spark, tmp_path)
@@ -1663,3 +1664,82 @@ def test_finish_interrupted_ledger_swap_states(tmp_path):
     _finish_interrupted_ledger_swap(led)
     assert payload(led) == "old"
     assert not os.path.exists(led + ".reclaim-old")
+
+
+def _one_ledger_gated_batch(spark, tmp_path, lines, seed_keys=()):
+    """Run the ledger-gated sink over one landing file as a single
+    availableNow micro-batch; returns (query, ledger path, output dir)."""
+    import datetime as _dt
+
+    from quill_agent_dashboard_pbi_etl_spark.functions.adapter import (
+        normalize_webhooks,
+    )
+    from quill_agent_dashboard_pbi_etl_spark.sinks import append_ledger
+    from quill_agent_dashboard_pbi_etl_spark.streaming.pipeline import (
+        envelopes_to_webhook_shape,
+        start_ledger_gated_fact_sink,
+    )
+
+    now_epoch = int(_dt.datetime(2024, 1, 20, tzinfo=_dt.timezone.utc).timestamp())
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    with open(landing / "b1.json", "w") as f:
+        f.write("".join(line + "\n" for line in lines))
+    ledger = str(tmp_path / "ledger")
+    if seed_keys:
+        append_ledger(
+            spark.createDataFrame(
+                [(k, None, now_epoch + 86400, "seed") for k in seed_keys],
+                "pk string, seenAt timestamp, expiresAt long, writer_id string",
+            ),
+            ledger,
+        )
+    fact = normalize_webhooks(
+        envelopes_to_webhook_shape(read_envelope_stream(spark, str(landing)))
+    )
+    out = str(tmp_path / "fact")
+    q = start_ledger_gated_fact_sink(
+        fact,
+        ledger,
+        out,
+        str(tmp_path / "ckpt"),
+        available_now=True,
+        now_epoch=now_epoch,
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    return q, ledger, out
+
+
+def test_ledger_gated_sink_trigger_job_budget_and_unpins(spark, tmp_path):
+    """One micro-batch against an existing ledger runs at most 9 Spark jobs
+    (counted through the stream's job group, which is its run id): the row
+    counts ride the pins' own actions, the ledger read skips schema
+    inference, and the small-batch gate is shuffle-free. The batch also
+    leaves no persisted RDD behind: its pins are unpinned at batch end."""
+    sc = spark.sparkContext
+    persisted_before = set(sc._jsc.getPersistentRDDs().keys())
+    lines = [json.dumps(_envelope(eid)) for eid in (1, 2, 3, 3, 4)]
+    q, _, out = _one_ledger_gated_batch(
+        spark, tmp_path, lines, seed_keys=("ALOWARE:1", "ALOWARE:2")
+    )
+    got = sorted(r.EventID for r in spark.read.parquet(out).collect())
+    assert got == ["ALOWARE:3", "ALOWARE:4"]
+    assert [p.batchId for p in q.recentProgress if p.numInputRows] == [0]
+    jobs = list(sc.statusTracker().getJobIdsForGroup(str(q.runId)))
+    assert 0 < len(jobs) <= 9, f"{len(jobs)} jobs in one micro-batch"
+    persisted_after = set(sc._jsc.getPersistentRDDs().keys())
+    assert persisted_after <= persisted_before, "the micro-batch left pins behind"
+
+
+def test_ledger_gated_sink_all_malformed_batch_writes_nothing(spark, tmp_path):
+    """A landing file whose every line is malformed normalizes to zero rows:
+    the batch returns before the ledger lock — no ledger file and no
+    gen=*/batch_id=* output directory."""
+    import glob
+
+    _, ledger, out = _one_ledger_gated_batch(
+        spark, tmp_path, ["{not json", "]]", "plain text"]
+    )
+    assert not glob.glob(os.path.join(ledger, "**", "*.parquet"), recursive=True)
+    assert not glob.glob(os.path.join(out, "gen=*", "batch_id=*"))

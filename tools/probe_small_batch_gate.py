@@ -44,11 +44,15 @@ import subprocess
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from probe_common import ambient_suspect  # noqa: E402
 
+# Cells measured before the inverted shape dropped its two dropDuplicates
+# (each an aggregate + shuffle) are keyed without this suffix.
+INVERTED_SHAPE = "shuffle_free"
 N_ROWS_DEFAULT = 100_000_000
 N_EVENTS_DEFAULT = 12_500  # one SLA-paced micro-batch
 N_DAYS = 15
@@ -71,6 +75,7 @@ def run_cell(
     from quill_agent_dashboard_pbi_etl_spark import sinks
     from quill_agent_dashboard_pbi_etl_spark.operators.dedup import (
         anti_join_small_left,
+        probe_volume_estimate,
     )
     from quill_agent_dashboard_pbi_etl_spark.session import get_spark
 
@@ -122,6 +127,7 @@ def run_cell(
         else:
             survivors = events.join(live, "EventID", "left_anti").count()
         walls.append(round(time.perf_counter() - t0, 3))
+    live_est = probe_volume_estimate(live)
     print(
         json.dumps(
             {
@@ -133,6 +139,9 @@ def run_cell(
                 "rep_wall_seq": walls,
                 "warm_min_sec": (min(walls[1:]) if len(walls) > 1 else None),
                 "survivors": survivors,
+                # the plan-stat estimates gate_anti_join's selector reads
+                "live_est_bytes": live_est,
+                "events_est_bytes": probe_volume_estimate(events),
                 "n_rows": n_rows,
                 "n_events": n_events,
             }
@@ -228,16 +237,18 @@ def main() -> None:
             summary["plain_warm_min_sec"] / summary["inverted_warm_min_sec"], 2
         )
 
-    ladder_path = "/root/repo/SCALE_LADDER.json"
+    ladder_path = os.path.join(ROOT, "SCALE_LADDER.json")
     data = json.load(open(ladder_path)) if os.path.exists(ladder_path) else {}
-    key = f"gate_n{n_rows // 1_000_000}m_ev{n_events}_{layout}" + (
+    size = f"{n_rows // 1_000_000}m" if n_rows >= 1_000_000 else f"{n_rows // 1000}k"
+    key = f"gate_n{size}_ev{n_events}_{layout}" + (
         f"_warm{reps}" if reps > 1 else ""
-    )
+    ) + f"_{INVERTED_SHAPE}"
     data.setdefault("small_batch_gate", {})[key] = {
         "cells": cells,
         "summary": summary,
         "n_days": N_DAYS,
         "layout": layout,
+        "inverted_shape": INVERTED_SHAPE,
         "note": (
             "Exact-gate shape A/B at one micro-batch: plain = events LEFT "
             "ANTI live (flat layout -> sort-merge, the plain shape's best "
