@@ -172,7 +172,7 @@ from ..operators.dedup import parse_spark_bytes as _parse_spark_bytes  # noqa: E
 def should_bloom_pregate(
     live_est_bytes: int | None,
     broadcast_threshold_bytes: int | None,
-    batch_rows: int | None,
+    batch_rows: int,
     min_batch_rows: int | None = None,
 ) -> bool:
     """The measured pre-gate rule as a pure predicate. Enable only when the
@@ -188,17 +188,12 @@ def should_bloom_pregate(
     including the past-broadcast one, is negative-to-tie (see the
     comment block above ``PREGATE_AUTO_MIN_BATCH_ROWS`` for the full
     history). Unknown live estimate -> False (a pure in-memory ledger
-    bootstrap is tiny).
-
-    ``batch_rows=None`` means "assume a huge batch": only the live-ledger
-    axes are tested. The predicate is monotone in ``batch_rows``, so
-    None ≡ +inf — it asks whether the pre-gate COULD fire at all before
-    a caller pays for a batch count."""
+    bootstrap is tiny)."""
     if min_batch_rows is None:
         min_batch_rows = PREGATE_AUTO_MIN_BATCH_ROWS
     if live_est_bytes is None:
         return False
-    if batch_rows is not None and batch_rows < min_batch_rows:
+    if batch_rows < min_batch_rows:
         return False
     if broadcast_threshold_bytes is None:
         return False  # unparseable conf: can't judge the cliff, stay exact

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -21,3 +22,22 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+BROADCAST_THRESHOLD = "spark.sql.autoBroadcastJoinThreshold"
+# connected_components lanes: "driver" under the session's broadcast budget
+# (every test graph fits it), "loop" with the budget disabled.
+CC_LANES = ("driver", "loop")
+
+
+@contextmanager
+def cc_lane(spark, lane):
+    """Run the body with ``connected_components`` forced onto ``lane``; the
+    session's broadcast threshold is restored afterwards, even on failure."""
+    old = spark.conf.get(BROADCAST_THRESHOLD)
+    if lane == "loop":
+        spark.conf.set(BROADCAST_THRESHOLD, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(BROADCAST_THRESHOLD, old)

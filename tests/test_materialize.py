@@ -56,26 +56,33 @@ def test_unpin_frees_blocks_and_is_noop_on_plain_frames(spark):
 
 
 def test_connected_components_retires_superseded_pins(spark):
-    """The CC loop must not leave one dead block generation per round: after
-    the call returns, only the FINAL pinned step may remain persisted (the
-    returned frame is backed by it); the symmetric edge pin and every
-    superseded round must be gone (materialize.unpin)."""
+    """CC must not leave one dead block generation per round: after the call
+    returns, the loop lane may keep only the FINAL pinned step persisted (the
+    returned frame is backed by it), and the driver lane none; the symmetric
+    edge pin and every superseded round must be gone (materialize.unpin)."""
     from quill_agent_dashboard_pbi_etl_spark.operators import clustering
 
+    from conftest import CC_LANES, cc_lane
+
     sc = spark.sparkContext
-    before = sc._jsc.sc().getPersistentRDDs().size()
-    # a diameter-4 chain forces >1 loop round before convergence
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "doc_a long, doc_b long"
-    )
-    comp = clustering.connected_components(edges)
-    got = {(r["node"], r["cluster_id"]) for r in comp.collect()}
-    assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)}
-    after = sc._jsc.sc().getPersistentRDDs().size()
-    assert after <= before + 1, (
-        f"CC leaked {after - before} persisted RDDs (expected <= 1: the "
-        "final step backing the result)"
-    )
+    for lane in CC_LANES:
+        with cc_lane(spark, lane):
+            before = sc._jsc.sc().getPersistentRDDs().size()
+            # a diameter-4 chain forces >1 loop round before convergence
+            edges = spark.createDataFrame(
+                [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "doc_a long, doc_b long"
+            )
+            comp = clustering.connected_components(edges)
+            got = {(r["node"], r["cluster_id"]) for r in comp.collect()}
+            assert got == {
+                (1, 1), (2, 1), (3, 1), (4, 1), (5, 1), (10, 10), (11, 10)
+            }, lane
+            after = sc._jsc.sc().getPersistentRDDs().size()
+        kept = 1 if lane == "loop" else 0
+        assert after <= before + kept, (
+            f"{lane} lane leaked {after - before} persisted RDDs (expected "
+            f"<= {kept}: the final step backing the result)"
+        )
 
 
 def test_pin_observed_counts_exactly_under_every_strategy(spark):

@@ -12,7 +12,7 @@ import pytest
 from quill_agent_dashboard_pbi_etl_spark.plans import extensions  # noqa: F401
 from quill_agent_dashboard_pbi_etl_spark.plans.registry import ORACLES, QUERIES
 
-from conftest import SF_SMALL
+from conftest import SF_SMALL, cc_lane
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -37,11 +37,17 @@ def duck():
     return con
 
 
-@pytest.mark.parametrize("name", sorted(ORACLES))
-def test_query_matches_oracle(spark, duck, name):
+def _spark_result(spark, name):
+    """(sorted column names, rows sorted by repr) — order-insensitive."""
     sdf = QUERIES[name](spark, SF_SMALL)
     scols = sorted(sdf.columns)
     srows = sorted((tuple(_norm(r[c]) for c in scols) for r in sdf.collect()), key=repr)
+    return scols, srows
+
+
+@pytest.mark.parametrize("name", sorted(ORACLES))
+def test_query_matches_oracle(spark, duck, name):
+    scols, srows = _spark_result(spark, name)
 
     rel = duck.sql(ORACLES[name])
     idx = sorted(range(len(rel.columns)), key=lambda i: rel.columns[i])
@@ -58,3 +64,18 @@ def test_rows_only_queries_run(spark, name):
     df = QUERIES[name](spark, SF_SMALL)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["corpus_pipeline_full", "dedup_survivors", "dup_clusters", "semantic_dup_clusters"],
+)
+def test_cc_queries_lane_invariant(spark, name):
+    """Lane-invariance canary: the connected-components queries return the
+    same rows with the default broadcast threshold (driver lane) as with
+    ``autoBroadcastJoinThreshold=-1`` (loop lane, and no broadcast joins
+    anywhere in the plan)."""
+    default = _spark_result(spark, name)
+    with cc_lane(spark, "loop"):
+        forced = _spark_result(spark, name)
+    assert forced == default

@@ -329,13 +329,6 @@ def test_should_bloom_pregate_regime_rule():
     assert not should_bloom_pregate(50 * mb, None, 10**9)
     # explicit floor override (what the e2e "auto" cell uses)
     assert should_bloom_pregate(1, -1, 1, min_batch_rows=0)
-    # batch_rows=None = "assume a huge batch": only the live axes are
-    # tested (the sink's could-it-fire pre-check before paying the
-    # batch-sizing count job; monotone in batch_rows, so None ≡ +inf)
-    assert should_bloom_pregate(50 * mb, 10 * mb, None)
-    assert not should_bloom_pregate(5 * mb, 10 * mb, None)
-    assert not should_bloom_pregate(None, 10 * mb, None)
-    assert not should_bloom_pregate(50 * mb, None, None)
 
 
 def test_parse_spark_bytes():
