@@ -9,14 +9,20 @@ components of the pair graph, then a canonical-survivor pick per component.
 Scale posture (100 TB):
 - ``connected_components`` pins the symmetric edge list once and counts its
   rows inside that pin's own action. The count picks one of two lanes:
-  - **driver lane** — when ``rows x 16 bytes`` (two bigints per directed
-    edge) fits the session's ``spark.sql.autoBroadcastJoinThreshold``, the
-    ``a <= b`` half is collected through Arrow and the components are
-    resolved with vectorized numpy hooking + pointer jumping, then returned
-    as a ``LocalRelation``. This is the budget Spark already spends to
-    collect a relation onto the driver for a broadcast join, so no new conf
+  - **driver lane** — when ``rows x 64 bytes`` fits the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, the ``a <= b`` half is
+    collected through Arrow and the components are resolved with vectorized
+    numpy hooking + pointer jumping, then returned as a ``LocalRelation``.
+    64 bytes per directed edge is the lane's measured Python peak (numpy,
+    pandas and Arrow buffers together: 61.8-61.9 bytes from 0.25M to 8M
+    directed edges, ``tools/probe_cc_lanes.py``), so the lane runs only where
+    its whole driver-side footprint fits the budget Spark already spends to
+    collect one relation onto the driver for a broadcast join. No new conf
     exists; a threshold <= 0 (or unparseable) disables the lane. No round
     loop, no per-round pins: the whole call is the edge pin plus one collect.
+    The boundary is set by that memory budget, not by speed: on the same
+    graphs the driver lane was 4-9x faster than the loop from 0.25M to 4M
+    directed edges (``SCALE_LADDER.json["cc_lanes"]``).
   - **loop lane** — every bigger graph runs iterative min-label propagation
     over DataFrame joins: every round is one equi-join + one groupBy
     (shuffle on node id), never a cross join, and lineage is truncated per
@@ -43,10 +49,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from .dedup import parse_spark_bytes
-from .materialize import local_frame, pin, pin_observed, unpin
+from .materialize import pin, pin_observed, unpin
 
-# Driver-lane size of one directed edge: two bigint node ids.
-_EDGE_BYTES = 16
+# Driver-lane Python peak per directed edge, measured (61.8 bytes) and
+# rounded up: see tools/probe_cc_lanes.py and SCALE_LADDER.json["cc_lanes"].
+_EDGE_BYTES = 64
 
 
 def _pin_step_counting_changes(df: DataFrame) -> tuple[DataFrame, int]:
@@ -90,16 +97,17 @@ def _components_on_driver(sym: DataFrame) -> DataFrame:
     tree — i.e. when each component's root is its minimum id.
     """
     import numpy as np
+    import pandas as pd
 
     spark = sym.sparkSession
     id_type = sym.schema["a"].dataType
     half = sym.filter(F.col("a") <= F.col("b")).toPandas()
     unpin(sym)  # collected: the edge pin is dead weight now
     n_edges = len(half)
-    nodes, idx = np.unique(
-        np.concatenate([half["a"].to_numpy(), half["b"].to_numpy()]),
-        return_inverse=True,
-    )
+    ends = np.concatenate([half["a"].to_numpy(), half["b"].to_numpy()])
+    del half  # the ids live on in ``ends``; drop the frame before unique
+    nodes, idx = np.unique(ends, return_inverse=True)
+    del ends
     ia, ib = idx[:n_edges], idx[n_edges:]
     parent = np.arange(len(nodes))
     while True:
@@ -115,8 +123,10 @@ def _components_on_driver(sym: DataFrame) -> DataFrame:
     schema = StructType(
         [StructField("node", id_type), StructField("cluster_id", id_type)]
     )
-    return local_frame(
-        spark, list(zip(nodes.tolist(), nodes[parent].tolist())), schema
+    # Straight from the arrays through the same Arrow path local_frame uses:
+    # no per-row Python objects.
+    return spark.createDataFrame(
+        pd.DataFrame({"node": nodes, "cluster_id": nodes[parent]}), schema
     )
 
 
@@ -131,7 +141,7 @@ def connected_components(
     component. Both lanes return that same answer.
 
     The symmetric edge list is pinned once, and the pin's own action counts
-    its rows. If ``rows x 16 bytes`` fits the session's
+    its rows. If ``rows x 64 bytes`` fits the session's
     ``spark.sql.autoBroadcastJoinThreshold``, the components are resolved
     on the driver (:func:`_components_on_driver`) with no round loop.
     Otherwise min-label propagation with pointer jumping runs as a loop of
@@ -274,9 +284,11 @@ def connected_components(
             f"connected_components did not converge within max_iter={max_iter} "
             "rounds; the component graph has long chains — the loop's rounds "
             "grow about linearly with chain diameter in random id order. "
-            "Raise max_iter, or give spark.sql.autoBroadcastJoinThreshold "
-            "at least 16 bytes per directed edge so the driver lane resolves "
-            "the graph without rounds."
+            "Raise max_iter. (A spark.sql.autoBroadcastJoinThreshold large "
+            "enough for the driver lane also avoids the rounds, but that "
+            "threshold governs every broadcast join in the session: raising "
+            "it lets any join collect relations of that size onto the "
+            "driver and executors.)"
         )
     # Only the FINAL step backs the returned frame; the symmetric edge pin —
     # the big one, two rows per input pair — is dead once that step exists.
